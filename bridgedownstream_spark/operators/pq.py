@@ -13,8 +13,8 @@ All three phases are DataFrame ops:
 
 - **train**: per-subspace k-means (Lloyd), all m subspaces trained in ONE
   joint loop — vectors explode to (vec_id, sub, subvec) rows once, each
-  iteration is a broadcast join + map-side-combined struct-min argmin +
-  narrow-keyed mean, and the codebook frame is localCheckpointed per
+  iteration is a nearest-centroid assignment (ann.nearest, keyed by sub)
+  + narrow-keyed mean, and the codebook frame is localCheckpointed per
   round (O(1) lineage, same pattern as connected components /
   kmeans_refine_centroids).
 - **encode**: final assignment kept in LONG format (vec_id, sub, code) —
@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bridgedownstream_spark.operators.ann import DOT, L2, nearest
+
 __all__ = [
     "train_pq",
     "encode_pq",
@@ -43,17 +45,6 @@ __all__ = [
     "ivfpq_index",
     "ivfpq_shortlist",
 ]
-
-#: L2 between subvec and centroid — identical fold order both uses
-_L2 = (
-    "aggregate(zip_with(subvec, c_vec, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
-_DOT = (
-    "aggregate(zip_with(subvec, c_vec, (x, y) -> x * y), "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
-
 
 def _subvectors(emb: DataFrame, m: int) -> DataFrame:
     """(vec_id, sub, subvec): each embedding split into m equal slices.
@@ -168,41 +159,10 @@ def pq_index(
 
 
 def _assign(sv: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest centroid per (vec_id, sub), ROW-LOCALLY (r10): the k
-    candidates of each subspace collect into ONE array per sub (a
-    16-row broadcast), each (vec_id, sub) row folds its own candidate
-    structs via array_min(transform(...)), and the assignment becomes a
-    pure map — ZERO exchange. array_min uses the same struct order
-    (dist, then cent_id) over the same round(L2, 9) values as the former
-    min() aggregate (and the window before it), so the winner is
-    bit-identical; the r9 struct-min form still shuffled one
-    (dist, cent_id, subvec) struct per (vec_id, sub)."""
-    cands = F.broadcast(
-        cent.groupBy("sub").agg(
-            F.expr("array_sort(collect_list(struct(cent_id, c_vec)))").alias(
-                "cands"
-            )
-        )
-    )
-    l2_c = _L2.replace("c_vec", "c.c_vec")
-    return (
-        sv.join(cands, "sub")
-        .select(
-            "vec_id",
-            "sub",
-            "subvec",
-            F.expr(
-                "array_min(transform(cands, c -> "
-                f"struct(round({l2_c}, 9) AS dist, c.cent_id AS cent_id)))"
-            ).alias("best"),
-        )
-        .select(
-            "vec_id",
-            "sub",
-            "subvec",
-            F.col("best.cent_id").alias("cent_id"),
-        )
-    )
+    """Nearest centroid per (vec_id, sub): (vec_id, sub, subvec, cent_id)."""
+    return nearest(
+        sv, cent, "subvec", "c_vec", "cent_id", digits=9, key="sub"
+    ).select("vec_id", "sub", "subvec", "cent_id")
 
 
 def encode_pq(emb: DataFrame, cent: DataFrame, m: int = 16) -> DataFrame:
@@ -238,7 +198,9 @@ def pq_shortlist(
             "query_id",
             "sub",
             F.col("cent_id").alias("code"),
-            F.round(F.expr(_DOT), 6).cast("decimal(18,6)").alias("partial"),
+            F.round(F.expr(DOT.format(a="subvec", b="c_vec")), 6)
+            .cast("decimal(18,6)")
+            .alias("partial"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.col("approx_dot").desc(), "vec_id")
@@ -261,55 +223,17 @@ def pq_shortlist(
 # space. This is the standard billion-vector index layout.
 # ---------------------------------------------------------------------------
 
-_L2_EMB = (
-    "aggregate(zip_with(emb, c_vec, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
 
-
-def _coarse_assign(d: DataFrame, coarse: DataFrame, id_col: str = "vec_id"):
-    """Nearest coarse cell per vector + the residual: (id, cell_id,
-    embedding=emb−centroid). The n_cells-row centroid frame broadcasts
-    into a nested-loop over the corpus (bounded: cells × rows), distances
-    round to 9 before the argmin, ties break on cell_id — the same
-    determinism contract as PQ's _assign. The argmin is a map-side-
-    combinable min over struct(dist, cell_id, residual): candidate
-    residuals cost n_cells cheap zip_withs per vector, and in exchange
-    the shuffle carries ONE 64-dim struct per vector instead of n_cells
-    (emb, c_vec) pairs through a window sort.
-
-    r10: ROW-LOCAL — the n_cells centroids collect into ONE broadcast
-    array row; each vector folds its candidates via array_min (same
-    struct order: dist, then cell_id — the winner's c_vec rides third
-    and is never compared since (dist, cell_id) is unique) and takes its
-    residual against the winner locally. The assignment is a pure
-    projection: ZERO exchange, no crossJoin row expansion."""
-    cells_row = F.broadcast(
-        coarse.agg(
-            F.expr("array_sort(collect_list(struct(cell_id, c_vec)))").alias(
-                "cells"
-            )
-        )
-    )
-    l2_c = _L2_EMB.replace("c_vec", "c.c_vec")
-    return (
-        d.crossJoin(cells_row)
-        .select(
-            id_col,
-            "emb",
-            F.expr(
-                "array_min(transform(cells, c -> "
-                f"struct(round({l2_c}, 9) AS dist, "
-                "c.cell_id AS cell_id, c.c_vec AS c_vec)))"
-            ).alias("best"),
-        )
-        .select(
-            id_col,
-            F.col("best.cell_id").alias("cell_id"),
-            F.expr("zip_with(emb, best.c_vec, (x, y) -> x - y)").alias(
-                "embedding"
-            ),
-        )
+def _coarse_assign(d: DataFrame, coarse: DataFrame) -> DataFrame:
+    """Nearest coarse cell per vector + the residual: (vec_id, cell_id,
+    embedding=emb−centroid). The winner's c_vec rides along in the
+    assignment, so the residual is taken row-locally."""
+    return nearest(
+        d, coarse, "emb", "c_vec", "cell_id", digits=9, carry=("c_vec",)
+    ).select(
+        "vec_id",
+        "cell_id",
+        F.expr("zip_with(emb, c_vec, (x, y) -> x - y)").alias("embedding"),
     )
 
 
@@ -385,7 +309,7 @@ def ivfpq_shortlist(
     wq = W.partitionBy("query_id").orderBy("dist", "cell_id")
     qcells = (
         qd.crossJoin(F.broadcast(coarse))
-        .withColumn("dist", F.round(F.expr(_L2_EMB), 9))
+        .withColumn("dist", F.round(F.expr(L2.format(a="emb", b="c_vec")), 9))
         .withColumn("rn", F.row_number().over(wq))
         .where(F.col("rn") <= probes)
         .select(
@@ -420,7 +344,9 @@ def ivfpq_shortlist(
         "cell_id",
         "sub",
         F.col("cent_id").alias("code"),
-        F.round(F.expr(_L2), 6).cast("decimal(18,6)").alias("partial"),
+        F.round(F.expr(L2.format(a="subvec", b="c_vec")), 6)
+        .cast("decimal(18,6)")
+        .alias("partial"),
     )
     w = W.partitionBy("query_id").orderBy(F.col("approx_dist").asc(), "vec_id")
     return (

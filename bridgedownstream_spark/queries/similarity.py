@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from bridgedownstream_spark.operators.ann import DOT, nearest
 from bridgedownstream_spark.queries.util import tbl, wide
 
 QUERIES: dict = {}
@@ -516,11 +517,6 @@ def _emb_norms(spark, sf_dir):
     ).select("vec_id", "emb", "nrm")
 
 
-_DOT_SPARK = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
-
-
 @q(
     "ann_topk_cosine",
     _EMB_CTE_DUCK + f"""
@@ -553,7 +549,7 @@ def ann_topk_cosine(spark, sf_dir):
     )
     pairs = qs.crossJoin(e).where(F.col("vec_id") != F.col("query_id"))
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
+        F.expr(DOT.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
@@ -600,7 +596,7 @@ _PLANE_W = [
 
 def _plane_dot_spark(j: int) -> str:
     w = "array(" + ", ".join(f"{x!r}D" for x in _PLANE_W[j]) + ")"
-    return _DOT_SPARK.format(a=f"slice({w}, 1, size(emb))", b="emb")
+    return DOT.format(a=f"slice({w}, 1, size(emb))", b="emb")
 
 
 def _plane_dot_duck(j: int) -> str:
@@ -682,7 +678,7 @@ def ann_lsh_bucketed(spark, sf_dir):
         b, (F.col("q_bucket") == F.col("bucket")) & (F.col("vec_id") != F.col("query_id"))
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
+        F.expr(DOT.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
@@ -719,7 +715,7 @@ def _ivf_cent(spark, sf_dir):
 
 def _ivf_ccos():
     return F.round(
-        F.expr(_DOT_SPARK.format(a="emb", b="c_emb"))
+        F.expr(DOT.format(a="emb", b="c_emb"))
         / (F.col("nrm") * F.col("c_nrm")),
         6,
     )
@@ -727,58 +723,13 @@ def _ivf_ccos():
 
 def _ivf_assign(spark, sf_dir):
     """The 1-cell corpus assignment (vec_id, emb, nrm, cent_id) — the IVF
-    index, computed from the parquet inputs on every invocation (r9: the
-    former stamped memo served later queries a precomputed assignment).
-    The localCheckpoint covers within-invocation reuse: probe and corpus
-    branches of one search read one assignment pass.
-
-    r10: the argmax is ROW-LOCAL — the n_cells centroids collect into ONE
-    broadcast array row and each vector folds its own candidate structs
-    via array_max(transform(cents, c -> struct(ccos, -cent_id))).
-    array_max uses the same struct order as the former max() aggregate
-    (ccos desc, then smallest cent_id via the negation — the original
-    window's tie-break) over the same round(dot/(nrm*nrm), 6) values, so
-    the winner is bit-identical, but the assignment is now a pure
-    projection: ZERO exchange, no crossJoin row expansion carrying the
-    embedding n_cells times (the r9 struct-max form still shuffled one
-    (ccos, neg_cent, emb, nrm) struct per vector)."""
-    e, _ = _ivf_cent(spark, sf_dir)
-    cents_row = F.broadcast(
-        e.where(
-            (F.col("vec_id") % 250 == 0) & (F.col("vec_id") < 250 * _N_CELLS)
-        )
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("emb").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
-        .agg(
-            F.expr(
-                "array_sort(collect_list(struct(cent_id, c_emb, c_nrm)))"
-            ).alias("cents")
-        )
-    )
-    ccos_c = (
-        f"round({_DOT_SPARK.format(a='emb', b='c.c_emb')}"
-        " / (nrm * c.c_nrm), 6)"
-    )
+    index, computed from the parquet inputs on every invocation. The
+    localCheckpoint covers within-invocation reuse: probe and corpus
+    branches of one search read one assignment pass."""
+    e, cent = _ivf_cent(spark, sf_dir)
     return (
-        e.crossJoin(cents_row)
-        .select(
-            "vec_id",
-            "emb",
-            "nrm",
-            F.expr(
-                "array_max(transform(cents, c -> "
-                f"struct({ccos_c} AS ccos, -c.cent_id AS neg_cent)))"
-            ).alias("best"),
-        )
-        .select(
-            "vec_id",
-            "emb",
-            "nrm",
-            (-F.col("best.neg_cent")).alias("cent_id"),
-        )
+        nearest(e, cent, "emb", "c_emb", "cent_id", digits=6, metric="cos")
+        .select("vec_id", "emb", "nrm", "cent_id")
         .localCheckpoint(eager=False)
     )
 
@@ -835,7 +786,7 @@ def ann_ivf_topk(spark, sf_dir):
         (F.col("cell") == F.col("cent_id")) & (F.col("vec_id") != F.col("query_id")),
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
+        F.expr(DOT.format(a="q_emb", b="emb")) / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
@@ -889,7 +840,7 @@ def ann_ivf_multiprobe(spark, sf_dir):
     instead of one — the standard recall knob for inverted-file ANN
     (boundary queries whose true neighbors sit just across the Voronoi
     edge are the 1-probe failure mode). The corpus index is UNCHANGED
-    (each vector in exactly one cell, reused from the cached 1-probe
+    (each vector in exactly one cell, reused from the 1-probe
     assignment), so probing more cells multiplies only the per-query
     candidate volume — cells × probes, never corpus size — and no pair
     can appear twice (a corpus vector has one cell)."""
@@ -917,7 +868,7 @@ def ann_ivf_multiprobe(spark, sf_dir):
         & (F.col("vec_id") != F.col("query_id")),
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb"))
+        F.expr(DOT.format(a="q_emb", b="emb"))
         / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
@@ -1023,7 +974,7 @@ def embedding_near_dup(spark, sf_dir):
     b = _bucketed(spark, sf_dir)
     a, c = b.alias("a"), b.alias("c")
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="a.emb", b="c.emb"))
+        F.expr(DOT.format(a="a.emb", b="c.emb"))
         / (F.col("a.nrm") * F.col("c.nrm")),
         4,
     )
@@ -1044,12 +995,8 @@ def embedding_near_dup(spark, sf_dir):
 
 _KM_ITERS = 2
 
-#: squared-L2 distance between emb and c_emb — identical left-to-right
-#: fold order in both engines
-_L2_SPARK = (
-    "aggregate(zip_with(emb, c_emb, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
+#: squared-L2 distance between v.emb and c.c_emb — the same left-to-right
+#: fold order as ann.L2
 _L2_DUCK = (
     "list_sum(list_transform(generate_series(1, len(v.emb)), "
     "i -> (v.emb[i] - c.c_emb[i]) * (v.emb[i] - c.c_emb[i])))"
@@ -1097,10 +1044,9 @@ def kmeans_refine_centroids(spark, sf_dir):
     (cell, dim, component) rows.
 
     This is the *training* half of IVF that ann_ivf_topk's docstring
-    defers to — expressed in DataFrame ops: assignment is a broadcast
-    join + map-side-combined struct-min argmin (8 centroids ride along;
-    the corpus never shuffles candidate rows, only one winner struct per
-    vector), the mean is posexplode → one narrow-keyed aggregation, and
+    defers to — expressed in DataFrame ops: assignment is the row-local
+    ann.nearest fold over the 8 broadcast centroids (the corpus never
+    shuffles), the mean is posexplode → one narrow-keyed aggregation, and
     each round's tiny centroid frame is localCheckpointed so iteration
     lineage stays O(1), exactly the connected-components pattern.
 
@@ -1110,9 +1056,9 @@ def kmeans_refine_centroids(spark, sf_dir):
     unrolled-CTE DuckDB twin matches hash-for-hash despite the two
     engines aggregating in different orders. A dyadic double can never be
     a decimal half-way case, so the double→decimal rounding agrees too."""
-    # scan-width floor before the per-iteration assign: the struct-min
-    # partial aggregate (and its candidate L2 folds) otherwise runs at
-    # the scan's single-row-group width (util.wide — cluster no-op)
+    # scan-width floor before the per-iteration assign: the candidate L2
+    # folds otherwise run at the scan's single-row-group width
+    # (util.wide — cluster no-op)
     e = wide(spark, tbl(spark, sf_dir, "embeddings"), sf_dir, "embeddings").select(
         "vec_id", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb")
     )
@@ -1121,37 +1067,8 @@ def kmeans_refine_centroids(spark, sf_dir):
     ).select(F.col("vec_id").alias("cent_id"), F.col("emb").alias("c_emb"))
     means = None
     for _ in range(_KM_ITERS):
-        # r10 (the r9/r10 isolated 100x gates breached the struct-min
-        # form's budget — its exchange carried one (dist, cent_id,
-        # emb[64]) struct PER VECTOR, and the crossJoin first
-        # materialized n_cells embedding-wide copies of every row): the
-        # argmin is now ROW-LOCAL — the 8 centroids collect into ONE
-        # broadcast array row and each vector folds its own candidate
-        # structs via array_min(transform(...)). array_min uses the same
-        # struct order (dist, then cent_id — the original window's
-        # tie-break) over the same round(L2, 6) values, so the winner is
-        # bit-identical, with ZERO vector-payload exchange per iteration:
-        # the only shuffle left is the means aggregate's map-side-combined
-        # (cell, d) partials.
-        cents_row = F.broadcast(
-            cent.agg(
-                F.expr(
-                    "array_sort(collect_list(struct(cent_id, c_emb)))"
-                ).alias("cents")
-            )
-        )
-        l2_c = _L2_SPARK.replace("c_emb", "c.c_emb")
-        assign = (
-            e.crossJoin(cents_row)
-            .select(
-                F.expr(
-                    "array_min(transform(cents, c -> "
-                    f"struct(round({l2_c}, 6) AS dist, "
-                    "c.cent_id AS cent_id)))"
-                ).alias("best"),
-                "emb",
-            )
-            .select(F.col("best.cent_id").alias("cell"), "emb")
+        assign = nearest(e, cent, "emb", "c_emb", "cent_id", digits=6).select(
+            F.col("cent_id").alias("cell"), "emb"
         )
         means = (
             assign.select("cell", F.posexplode("emb").alias("p", "x"))
@@ -2090,18 +2007,7 @@ def _sem_ranked(spark, sf_dir):
     stride = F.broadcast(
         e.agg(F.ceil(F.sqrt(F.count(F.lit(1)))).cast("bigint").alias("stride"))
     )
-    # r10: ROW-LOCAL argmax (same rewrite as _ivf_assign / kmeans) — the
-    # ~sqrt(n) centroids collect into ONE broadcast array row and each
-    # vector folds its own candidate structs via array_max. Identical
-    # winner (struct order ccos desc then smallest cent_id via the
-    # negation, same round(...,6) values); the assignment is a pure
-    # projection — the former groupBy(vec_id) exchange carried one
-    # (ccos, neg_cent, emb[64], nrm) struct per vector, and the
-    # crossJoin materialized ~sqrt(n) embedding-wide copies of every
-    # row first. Cell balance is unchanged, so the Theta(n^1.5) pair
-    # bound in the docstring still holds; the only exchange left before
-    # the rank window is the window's own (cell) clustering.
-    cents_row = F.broadcast(
+    cents = (
         e.crossJoin(stride)
         .where(F.col("vec_id") % F.col("stride") == 0)
         .select(
@@ -2109,36 +2015,13 @@ def _sem_ranked(spark, sf_dir):
             F.col("emb").alias("c_emb"),
             F.col("nrm").alias("c_nrm"),
         )
-        .agg(
-            F.expr(
-                "array_sort(collect_list(struct(cent_id, c_emb, c_nrm)))"
-            ).alias("cents")
-        )
     )
-    ccos_c = (
-        f"round({_DOT_SPARK.format(a='emb', b='c.c_emb')}"
-        " / (nrm * c.c_nrm), 6)"
+    assign = nearest(
+        e, cents, "emb", "c_emb", "cent_id", digits=6, metric="cos"
+    ).select(
+        "vec_id", "emb", "nrm", F.col("cent_id").alias("cell"), "score"
     )
-    assign = (
-        e.crossJoin(cents_row)
-        .select(
-            "vec_id",
-            "emb",
-            "nrm",
-            F.expr(
-                "array_max(transform(cents, c -> "
-                f"struct({ccos_c} AS ccos, -c.cent_id AS neg_cent)))"
-            ).alias("best"),
-        )
-        .select(
-            "vec_id",
-            "emb",
-            "nrm",
-            (-F.col("best.neg_cent")).alias("cell"),
-            F.col("best.ccos").alias("ccos"),
-        )
-    )
-    wr = W.partitionBy("cell").orderBy(F.col("ccos").desc(), "vec_id")
+    wr = W.partitionBy("cell").orderBy(F.col("score").desc(), "vec_id")
     return (
         assign.withColumn("rnk", F.row_number().over(wr))
         .select("vec_id", "emb", "nrm", "cell", "rnk")
@@ -2191,7 +2074,7 @@ def semdedup_prune(spark, sf_dir):
         F.col("nrm").alias("b_nrm"),
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="a_emb", b="b_emb"))
+        F.expr(DOT.format(a="a_emb", b="b_emb"))
         / (F.col("a_nrm") * F.col("b_nrm")),
         4,
     )
@@ -2302,7 +2185,7 @@ def ann_matryoshka_recall(spark, sf_dir):
     )
     pairs = qs.crossJoin(e).where(F.col("vec_id") != F.col("query_id"))
     tcos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_temb", b="temb"))
+        F.expr(DOT.format(a="q_temb", b="temb"))
         / (F.col("q_tnrm") * F.col("tnrm")),
         4,
     )
@@ -2321,7 +2204,7 @@ def ann_matryoshka_recall(spark, sf_dir):
     # rows ONLY (the funnel's whole point) — the shortlist broadcasts
     # into the corpus scan, then the query side broadcasts again
     fcos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb"))
+        F.expr(DOT.format(a="q_emb", b="emb"))
         / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
@@ -2457,7 +2340,7 @@ def ann_matryoshka_curve(spark, sf_dir):
     )
     pairs = qs.crossJoin(e).where(F.col("vec_id") != F.col("query_id"))
     fcos = F.round(
-        F.expr(_DOT_SPARK.format(a="q_emb", b="emb"))
+        F.expr(DOT.format(a="q_emb", b="emb"))
         / (F.col("q_nrm") * F.col("nrm")),
         4,
     )
@@ -2495,7 +2378,7 @@ def ann_matryoshka_curve(spark, sf_dir):
             )
         )
         tcos = F.round(
-            F.expr(_DOT_SPARK.format(a="q_temb", b="temb"))
+            F.expr(DOT.format(a="q_temb", b="temb"))
             / (F.col("q_tnrm") * F.col("tnrm")),
             4,
         )
@@ -2679,7 +2562,7 @@ def contrastive_pairs(spark, sf_dir):
         F.col("nrm").alias("b_nrm"),
     )
     cos = F.round(
-        F.expr(_DOT_SPARK.format(a="a_emb", b="b_emb"))
+        F.expr(DOT.format(a="a_emb", b="b_emb"))
         / (F.col("a_nrm") * F.col("b_nrm")),
         4,
     )

@@ -221,27 +221,72 @@ def test_every_query_plan_is_scale_clean(registry_dfs):
         assert "BatchEvalPython" not in plan, name
 
 
-def test_every_query_scans_only_declared_inputs(registry_dfs):
+#: a /tmp fixture basename up to its scale-factor tag: bds_lake_sf0.001
+#: -> "bds_lake_". Plan text renders some locations as escaped regexes
+#: (")?/*tmp/bds_compactlake_sf0\\.001/"), so paths match by this token.
+_FIXTURE_TOKEN = re.compile(r"(bds_[A-Za-z0-9_]*?_)sf")
+
+#: round-trip queries that write their own /tmp output from the testdata
+#: tables inside the query call and read it back: each may scan its own
+#: token only
+_WRITTEN_BY_QUERY = {
+    "csv_export_roundtrip": "bds_csv_",
+    "orc_export_roundtrip": "bds_orc_",
+    "fixed_width_roundtrip": "bds_fw_",
+}
+
+
+def _builder_tokens(spark) -> set[str]:
+    """The fixture tokens of every pipeline_q._build_* return value. The
+    builders are memoized, so this returns what registry_dfs built; a
+    catalog table name resolves to the files behind it."""
+    import os
+
+    from bridgedownstream_spark.queries import pipeline_q
+
+    tokens = set()
+    for name in dir(pipeline_q):
+        if not name.startswith("_build_"):
+            continue
+        out = getattr(pipeline_q, name)(spark, SF)
+        for v in out.values() if isinstance(out, dict) else (
+            out if isinstance(out, tuple) else (out,)
+        ):
+            paths = [v] if os.path.isabs(v) else spark.table(v).inputFiles()
+            for path in paths:
+                tokens.update(_FIXTURE_TOKEN.findall(path))
+    return tokens
+
+
+def test_every_query_scans_only_declared_inputs(spark, registry_dfs):
     """De-cache invariant as CI (VERDICT r9 #9): every file path any
     registry plan scans must be (a) the testdata dir itself, (b) a /tmp
-    fixture lake written by the declared pipeline builders (bds_* — the
+    fixture lake returned by a pipeline_q._build_* builder (the
     write-once ETL artifacts the lake queries READ, rebuilt per process),
     or (c) the local spark-warehouse. Anything else — in particular the
     r3-r5-era stamped result caches (bds_lshcand_*, bds_pq_*,
     bds_ivfpq_*) removed by the r9 de-cache — is result caching across
     runs: gaming, not optimization."""
-    # substring tokens, not prefixes: plan text renders some locations as
-    # glob/regex patterns (e.g. ")?/*tmp/bds_compactlake_sf0\\.001/")
-    allowed = ("testdata/", "tmp/bds_", "spark-warehouse")
+    allowed = ("testdata/", "spark-warehouse")
+    fixtures = _builder_tokens(spark)
     forbidden = ("bds_lshcand", "bds_pq_", "bds_ivfpq_")
     bad = []
     for name, df in registry_dfs.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
+        own = _WRITTEN_BY_QUERY.get(name)
+        mine = fixtures | ({own} if own else set())
         for m in re.finditer(r"file:([^\s,\]]+)", plan):
             path = m.group(1).rstrip(".")
-            if any(f in path for f in forbidden) or not any(
-                a in path for a in allowed
-            ):
+            tokens = _FIXTURE_TOKEN.findall(path)
+            cut = re.search(r"bds_\w*$", path)
+            if not tokens and cut and m.group(1).endswith("..."):
+                # an expression the plan text cut short: a prefix of a
+                # declared token
+                tokens = [t for t in mine if t.startswith(cut.group(0))][:1]
+            declared = any(a in path for a in allowed) or (
+                tokens and set(tokens) <= mine
+            )
+            if any(f in path for f in forbidden) or not declared:
                 bad.append(f"{name}: {path}")
     assert not bad, f"plans scan undeclared paths: {bad}"
 

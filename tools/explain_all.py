@@ -404,7 +404,8 @@ HEADLINERS = {
     ),
     "ann_ivf_topk": (
         "IVF ANN: centroid table broadcasts (Θ(cells)); corpus cell "
-        "assignment is cached per corpus; the search is a hash join "
+        "assignment is one shuffle-free pass per invocation "
+        "(ann.nearest); the search is a hash join "
         "on cell id — the vector corpus itself never re-shuffles per "
         "query."
     ),
